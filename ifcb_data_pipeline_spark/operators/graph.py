@@ -5,25 +5,22 @@ The reference resolves duplicate groups with per-file hash equality
 closure never exceeds one hash bucket there.  A fuzzy-dedup pair graph
 (LSH collisions, containment pairs) *does* chain: A~B, B~C with A≁C, and
 a 100 TB corpus can produce million-node near-dup chains (boilerplate
-families, serial crawls).  Two closure strategies live in this package:
+families, serial crawls).
 
-* ``queries.dedup._lsh_cluster_labels`` — min-label propagation, one
-  join per round, converges in O(component diameter) rounds.  Right
-  when components are compact (the LSH-collision common case).
-* :func:`connected_components` (here) — alternating large-star /
-  small-star contraction (Kiveris et al., *Connected Components in
-  MapReduce and Beyond*, ACM SoCC'14).  Each round is two
-  groupBy-min + join stages over the current edge set, and the edge set
-  contracts to a star forest rooted at component minima in **O(log n)**
-  rounds regardless of diameter — a 1M-node chain needs ~20 rounds
-  here versus ~1M for propagation.  This is the 100 TB-safe default
-  when component shape is unknown.
+:func:`connected_components` labels every node with its component
+minimum by alternating large-star / small-star contraction (Kiveris et
+al., *Connected Components in MapReduce and Beyond*, ACM SoCC'14).  Each
+round is two window-min shuffles over the current edge set, and the
+edge set contracts to a star forest rooted at component minima in
+**O(log n)** rounds regardless of diameter — a 1M-node chain needs ~20
+rounds here versus ~1M for min-label propagation.  Once the edge set
+fits one partition, a single Arrow task finishes the labeling.  It is
+the package's only connected-components implementation (dd6, dd7 and
+dd13 use it).
 
-Both return the same labeling (component minimum), so they are
-interchangeable and cross-checkable.  :func:`pagerank` (fixed-iteration
-link analysis — the crawl-side quality signal) shares the same iterative
-discipline: per-iteration key-partitioned joins with localCheckpoint-ed
-O(1) lineage.
+:func:`pagerank` (fixed-iteration link analysis — the crawl-side quality
+signal) shares the same iterative discipline: per-iteration
+key-partitioned joins with localCheckpoint-ed O(1) lineage.
 """
 
 from __future__ import annotations

@@ -1,9 +1,6 @@
-"""Verification for the STAGED (unregistered) round-12 candidate ops.
+"""Verification for dd20, a28, a29 and st9 (the round-12 pool).
 
-``queries/staged_r12.py`` is NOT imported by ``load_all`` — the driver
-never sees these four ops until a future round registers them.  This file
-gives them the same three verification layers a registered op gets on day
-one:
+Three verification layers per op:
 
 1. driver-strict DuckDB oracle compare (tests/oracle_harness.compare) at
    the session SF,
@@ -13,9 +10,6 @@ one:
 3. structural family laws that hold regardless of data (CM one-sided
    error, HLL register monotonicity vs subset, interval-union coverage
    bounds, loss monotone in watermark delay).
-
-Plus the staging hygiene gate: importing the staged module must not
-mutate the driver-visible REGISTRY.
 """
 
 from __future__ import annotations
@@ -26,13 +20,18 @@ import math
 import pandas as pd
 import pytest
 
-from ifcb_data_pipeline_spark.queries import REGISTRY, load_all
-from ifcb_data_pipeline_spark.queries.staged_r12 import STAGED
+from ifcb_data_pipeline_spark.queries import load_all
 from tests.oracle_harness import compare
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
-load_all()
+REG = load_all()
+POOL = (
+    "dd20_exact_substring_dedup",
+    "a28_hll_distinct_sketch",
+    "a29_cms_heavy_hitters",
+    "st9_join_state_audit",
+)
 
 
 def _h32(s: str) -> int:
@@ -44,32 +43,12 @@ def _dround(x: float, d: int) -> float:
     return math.floor(x * f + 0.5) / f
 
 
-# --- staging hygiene --------------------------------------------------------
-
-
-def test_pool_registered_and_pointers_live():
-    # round 11 registered this pool: every staged name must now be a
-    # driver-visible REGISTRY entry, and the STAGED pointer must be the
-    # very same fn/oracle the driver sees (not a stale copy)
-    assert set(STAGED) == {
-        "dd20_exact_substring_dedup",
-        "a28_hll_distinct_sketch",
-        "a29_cms_heavy_hitters",
-        "st9_join_state_audit",
-    }
-    assert set(STAGED) <= set(REGISTRY)
-    for name, sdef in STAGED.items():
-        assert sdef.fn is REGISTRY[name].fn
-        assert sdef.oracle == REGISTRY[name].oracle
-    assert len(REGISTRY) == 216
-
-
 # --- layer 1: driver-strict oracle compare ---------------------------------
 
 
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(POOL))
 def test_staged_matches_oracle(name, spark, duck, sf_dir):
-    qdef = STAGED[name]
+    qdef = REG[name]
     ok, msg = compare(qdef.fn(spark, sf_dir), duck, qdef.oracle)
     assert ok, f"{name}: {msg}"
 
@@ -79,7 +58,7 @@ def test_staged_matches_oracle(name, spark, duck, sf_dir):
 
 def test_dd20_bruteforce_gram_replay(spark):
     got = (
-        STAGED["dd20_exact_substring_dedup"]
+        REG["dd20_exact_substring_dedup"]
         .fn(spark, SF_SMOKE)
         .toPandas()
         .set_index("doc_id")
@@ -141,7 +120,7 @@ def _hll_replay(keys) -> tuple[float, int]:
 
 
 def test_a28_hashlib_hll_replay(spark):
-    got = STAGED["a28_hll_distinct_sketch"].fn(spark, SF_SMOKE).toPandas()
+    got = REG["a28_hll_distinct_sketch"].fn(spark, SF_SMOKE).toPandas()
     orders = pd.read_parquet(f"{SF_SMOKE}/orders.parquet")
     months = orders["o_orderdate"].astype("datetime64[ns]").dt.strftime("%Y-%m")
     for month, grp in orders.groupby(months):
@@ -226,7 +205,7 @@ def test_a28_linear_counting_ln_parity_exhaustive(spark, duck):
 
 
 def test_a29_hashlib_cms_replay_and_one_sided_law(spark):
-    got = STAGED["a29_cms_heavy_hitters"].fn(spark, SF_SMOKE).toPandas()
+    got = REG["a29_cms_heavy_hitters"].fn(spark, SF_SMOKE).toPandas()
     events = pd.read_parquet(f"{SF_SMOKE}/events.parquet")
     n = len(events)
     counters: dict[tuple[int, int], int] = {}
@@ -255,7 +234,7 @@ def test_a29_hashlib_cms_replay_and_one_sided_law(spark):
 
 def test_st9_nested_loop_replay_and_monotone_loss(spark):
     got = (
-        STAGED["st9_join_state_audit"]
+        REG["st9_join_state_audit"]
         .fn(spark, SF_SMOKE)
         .toPandas()
         .set_index("delay_s")

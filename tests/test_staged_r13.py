@@ -1,10 +1,6 @@
-"""Verification for the round-13 pool ops (REGISTERED in round 12).
+"""Verification for tx16, pk4, w13 and sim13 (the round-13 pool).
 
-``queries/staged_r13.py`` is now a pointer module: round 12 re-homed the
-four ops into their family modules and ``@register``'d them below the
-driver prefix (same checklist as staged_r12's round-11 registration).
-This file keeps giving them the same three verification layers a
-registered op gets on day one:
+Three verification layers per op:
 
 1. driver-strict DuckDB oracle compare at the session SF,
 2. pure-Python brute-force recomputation from the raw parquet at sf0.001
@@ -17,9 +13,6 @@ registered op gets on day one:
    dimension's max achiever; Cauchy-Schwarz on the quantized cosine),
    plus explicit "the filter bites" assertions so a vacuous corpus can't
    green these vacuously.
-
-Plus the pointer hygiene gate: the STAGED pointers must be the very
-objects the driver-visible REGISTRY holds (not stale copies).
 """
 
 from __future__ import annotations
@@ -31,14 +24,24 @@ from collections import Counter
 import pandas as pd
 import pytest
 
-from ifcb_data_pipeline_spark.queries import REGISTRY, load_all
-from ifcb_data_pipeline_spark.queries.staged_r12 import STAGED as STAGED_R12
-from ifcb_data_pipeline_spark.queries.staged_r13 import STAGED
+from ifcb_data_pipeline_spark.queries import load_all
 from tests.oracle_harness import compare
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
-load_all()
+REG = load_all()
+POOL = (
+    "tx16_bigram_vocab_coverage",
+    "pk4_cdc_chunking",
+    "w13_mad_anomaly",
+    "sim13_int8_quant_error",
+)
+POOL_R12 = (
+    "dd20_exact_substring_dedup",
+    "a28_hll_distinct_sketch",
+    "a29_cms_heavy_hitters",
+    "st9_join_state_audit",
+)
 
 
 def _h32(s: str) -> int:
@@ -50,33 +53,12 @@ def _dround(x: float, d: int) -> float:
     return math.floor(x * f + 0.5) / f
 
 
-# --- staging hygiene --------------------------------------------------------
-
-
-def test_pool_registered_and_pointers_live():
-    # round 12 registered this pool: every staged name must now be a
-    # driver-visible REGISTRY entry, and the STAGED pointer must be the
-    # very same fn/oracle the driver sees (not a stale copy)
-    assert set(STAGED) == {
-        "tx16_bigram_vocab_coverage",
-        "pk4_cdc_chunking",
-        "w13_mad_anomaly",
-        "sim13_int8_quant_error",
-    }
-    assert set(STAGED) <= set(REGISTRY)
-    for name, sdef in STAGED.items():
-        assert sdef.fn is REGISTRY[name].fn
-        assert sdef.oracle == REGISTRY[name].oracle
-    assert not (set(STAGED) & set(STAGED_R12))  # pools stay disjoint
-    assert len(REGISTRY) == 216
-
-
 # --- layer 1: driver-strict oracle compare ---------------------------------
 
 
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(POOL))
 def test_staged_matches_oracle(name, spark, duck, sf_dir):
-    qdef = STAGED[name]
+    qdef = REG[name]
     ok, msg = compare(qdef.fn(spark, sf_dir), duck, qdef.oracle)
     assert ok, f"{name}: {msg}"
 
@@ -92,7 +74,7 @@ def test_tx16_counter_replay_and_bite(spark):
     from ifcb_data_pipeline_spark.queries.text import TX16_BUCKETS
 
     got = (
-        STAGED["tx16_bigram_vocab_coverage"]
+        REG["tx16_bigram_vocab_coverage"]
         .fn(spark, SF_SMOKE)
         .toPandas()
         .set_index("lang")
@@ -140,7 +122,7 @@ def _cdc_chunks(text: str) -> list[str]:
 
 def test_pk4_hashlib_replay_conservation_and_bite(spark):
     got = (
-        STAGED["pk4_cdc_chunking"]
+        REG["pk4_cdc_chunking"]
         .fn(spark, SF_SMOKE)
         .toPandas()
         .set_index("doc_id")
@@ -191,7 +173,7 @@ def test_pk4_boundary_locality_law():
 
 def test_w13_order_statistic_replay_and_laws(spark):
     got = (
-        STAGED["w13_mad_anomaly"]
+        REG["w13_mad_anomaly"]
         .fn(spark, SF_SMOKE)
         .toPandas()
         .set_index("user_id")
@@ -228,7 +210,7 @@ def test_w13_order_statistic_replay_and_laws(spark):
 
 def test_sim13_ieee_exact_replay_and_laws(spark):
     got = (
-        STAGED["sim13_int8_quant_error"]
+        REG["sim13_int8_quant_error"]
         .fn(spark, SF_SMOKE)
         .toPandas()
         .set_index("vec_id")
@@ -269,14 +251,14 @@ def test_sim13_ieee_exact_replay_and_laws(spark):
     assert sat_total >= d
 
 
-# --- physical-shape sweep over BOTH staged pools -----------------------------
-# Mirror of test_physical_plans.test_registry_wide_no_scale_killers for the
-# unregistered candidates: no CartesianProduct anywhere; BNLJ and
+# --- physical-shape sweep over this pool and the r12 pool --------------------
+# Mirror of test_physical_plans.test_registry_wide_no_scale_killers for
+# these eight ops: no CartesianProduct anywhere; BNLJ and
 # SinglePartition only for the two ops whose design is a 1-row broadcast
 # total (a29's event count, sim13's collapsed 64-entry scale vector).
 
-_STAGED_BNLJ_OK = {"a29_cms_heavy_hitters", "sim13_int8_quant_error"}
-_STAGED_SINGLEPART_OK = {"a29_cms_heavy_hitters", "sim13_int8_quant_error"}
+_BNLJ_OK = {"a29_cms_heavy_hitters", "sim13_int8_quant_error"}
+_SINGLEPART_OK = {"a29_cms_heavy_hitters", "sim13_int8_quant_error"}
 
 
 def _plan_of(spark, fn, sf_dir: str) -> str:
@@ -288,13 +270,13 @@ def _plan_of(spark, fn, sf_dir: str) -> str:
 
 def test_staged_pools_no_scale_killers(spark, sf_dir):
     violations = []
-    for name, qd in sorted({**STAGED_R12, **STAGED}.items()):
-        plan = _plan_of(spark, qd.fn, sf_dir)
+    for name in sorted(POOL_R12 + POOL):
+        plan = _plan_of(spark, REG[name].fn, sf_dir)
         if "CartesianProduct" in plan:
             violations.append(f"{name}: CartesianProduct")
-        if "BroadcastNestedLoopJoin" in plan and name not in _STAGED_BNLJ_OK:
+        if "BroadcastNestedLoopJoin" in plan and name not in _BNLJ_OK:
             violations.append(f"{name}: unexpected BroadcastNestedLoopJoin")
-        if "SinglePartition" in plan and name not in _STAGED_SINGLEPART_OK:
+        if "SinglePartition" in plan and name not in _SINGLEPART_OK:
             violations.append(f"{name}: unexpected SinglePartition exchange")
     assert not violations, "\n".join(violations)
 
@@ -305,7 +287,7 @@ def test_tx16_vocab_join_is_broadcast(spark, sf_dir):
     (r12-verdict fix), so forcing a broadcast hash join is legitimate and
     a shuffled sort-merge (which would re-shuffle the whole tokenized
     corpus on the join key) must not appear."""
-    plan = _plan_of(spark, STAGED["tx16_bigram_vocab_coverage"].fn, sf_dir)
+    plan = _plan_of(spark, REG["tx16_bigram_vocab_coverage"].fn, sf_dir)
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     # The pin that would have caught the original defect (the r12 verdict
@@ -334,7 +316,7 @@ def test_pk4_has_no_window_and_two_corpus_scans(spark, sf_dir):
     parquet scans and no more."""
     import re
 
-    plan = _plan_of(spark, STAGED["pk4_cdc_chunking"].fn, sf_dir)
+    plan = _plan_of(spark, REG["pk4_cdc_chunking"].fn, sf_dir)
     assert "Window" not in plan, "pk4 regressed to the window/join-back shape"
     assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 2
 

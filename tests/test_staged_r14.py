@@ -1,11 +1,10 @@
-"""Verification for the STAGED (unregistered) round-14 candidate ops.
+"""Verification for i13, sp12, w14 and o10 (the round-14 pool).
 
 Same three layers as the r12/r13 pools (driver-strict oracle compare,
-pure-Python replay at sf0.001, structural family laws) plus the staging
-hygiene gate and the pool plan-shape sweep.  The replays use genuinely
-different algorithms: Python set algebra + hashlib for the MinHash
-maintenance (including an independent proof that least-merge equals
-recompute), a dict-based group splitter with a PLANTED row-level-split
+pure-Python replay at sf0.001, structural family laws) plus the pool
+plan-shape sweep.  The replays use genuinely different algorithms:
+Python set algebra + hashlib for the MinHash maintenance (including an
+independent proof that least-merge equals recompute), a dict-based group splitter with a PLANTED row-level-split
 leak the audit must catch, sorted-list tie-broken ranks for Spearman,
 and a literal sort-and-slice file simulator for the zone-map arithmetic.
 """
@@ -19,20 +18,20 @@ from collections import defaultdict
 import pandas as pd
 import pytest
 
-from ifcb_data_pipeline_spark.queries import REGISTRY, load_all
-from ifcb_data_pipeline_spark.queries.staged_r12 import STAGED as STAGED_R12
-from ifcb_data_pipeline_spark.queries.staged_r13 import STAGED as STAGED_R13
-from ifcb_data_pipeline_spark.queries.staged_r14 import (
-    _I13_PERMS,
-    _O10_FILE_DOCS,
-    _O10_THRESHOLDS,
-    STAGED,
-)
+from ifcb_data_pipeline_spark.queries import load_all
+from ifcb_data_pipeline_spark.queries.joins import _I13_PERMS
+from ifcb_data_pipeline_spark.queries.windows_sorts import _O10_FILE_DOCS, _O10_THRESHOLDS
 from tests.oracle_harness import compare
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
-load_all()
+REG = load_all()
+POOL = (
+    "i13_incremental_minhash",
+    "sp12_grouped_split_balance",
+    "w14_spearman_trend",
+    "o10_file_skipping_stats",
+)
 
 
 def _h32(s: str) -> int:
@@ -44,33 +43,12 @@ def _dround(x: float, d: int) -> float:
     return math.floor(x * f + 0.5) / f
 
 
-# --- staging hygiene --------------------------------------------------------
-
-
-def test_pool_registered_and_pointers_live():
-    # round 13 registered this pool: every staged name must now be a
-    # driver-visible REGISTRY entry, and the STAGED pointer must be the
-    # very same fn/oracle the driver sees (not a stale copy)
-    assert set(STAGED) == {
-        "i13_incremental_minhash",
-        "sp12_grouped_split_balance",
-        "w14_spearman_trend",
-        "o10_file_skipping_stats",
-    }
-    assert set(STAGED) <= set(REGISTRY)
-    for name, sdef in STAGED.items():
-        assert sdef.fn is REGISTRY[name].fn
-        assert sdef.oracle == REGISTRY[name].oracle
-    assert not (set(STAGED) & (set(STAGED_R12) | set(STAGED_R13)))  # disjoint
-    assert len(REGISTRY) == 216
-
-
 # --- layer 1: driver-strict oracle compare ---------------------------------
 
 
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(POOL))
 def test_staged_matches_oracle(name, spark, duck, sf_dir):
-    qdef = STAGED[name]
+    qdef = REG[name]
     ok, msg = compare(qdef.fn(spark, sf_dir), duck, qdef.oracle)
     assert ok, f"{name}: {msg}"
 
@@ -85,7 +63,7 @@ def _shingles(text: str) -> set[str]:
 
 def test_i13_hashlib_replay_and_merge_law(spark):
     got = (
-        STAGED["i13_incremental_minhash"]
+        REG["i13_incremental_minhash"]
         .fn(spark, SF_SMOKE)
         .toPandas()
         .set_index(["lang_a", "lang_b"])
@@ -145,7 +123,7 @@ def test_i13_hashlib_replay_and_merge_law(spark):
 
 def test_sp12_replay_partition_law_and_planted_leak(spark):
     got = (
-        STAGED["sp12_grouped_split_balance"]
+        REG["sp12_grouped_split_balance"]
         .fn(spark, SF_SMOKE)
         .toPandas()
         .set_index("split")
@@ -191,7 +169,7 @@ def test_sp12_replay_partition_law_and_planted_leak(spark):
 
 def test_w14_rank_replay_and_laws(spark):
     got = (
-        STAGED["w14_spearman_trend"]
+        REG["w14_spearman_trend"]
         .fn(spark, SF_SMOKE)
         .toPandas()
         .set_index("user_id")
@@ -233,7 +211,7 @@ def test_w14_monotone_series_law():
 
 def test_o10_sort_slice_replay_and_clustering_law(spark):
     got = (
-        STAGED["o10_file_skipping_stats"]
+        REG["o10_file_skipping_stats"]
         .fn(spark, SF_SMOKE)
         .toPandas()
         .set_index(["layout", "threshold"])
@@ -300,8 +278,8 @@ def test_staged_r14_no_scale_killers(spark, sf_dir):
     import re
 
     violations = []
-    for name, qd in sorted(STAGED.items()):
-        plan = _plan_of(spark, qd.fn, sf_dir)
+    for name in sorted(POOL):
+        plan = _plan_of(spark, REG[name].fn, sf_dir)
         if "CartesianProduct" in plan:
             violations.append(f"{name}: CartesianProduct")
         if len(re.findall(r"\(\d+\) BroadcastNestedLoopJoin", plan)) > 0 and (
@@ -319,13 +297,13 @@ def test_i13_is_checkpoint_fed(spark, sf_dir):
     across the five signature/set consumers (12 scans without it)."""
     import re
 
-    plan = _plan_of(spark, STAGED["i13_incremental_minhash"].fn, sf_dir)
+    plan = _plan_of(spark, REG["i13_incremental_minhash"].fn, sf_dir)
     assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 0
 
 
 def test_w14_is_single_scan_no_join(spark, sf_dir):
     import re
 
-    plan = _plan_of(spark, STAGED["w14_spearman_trend"].fn, sf_dir)
+    plan = _plan_of(spark, REG["w14_spearman_trend"].fn, sf_dir)
     assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
     assert "Join" not in plan

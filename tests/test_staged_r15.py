@@ -1,4 +1,4 @@
-"""Verification for the STAGED (unregistered) round-15 candidate ops.
+"""Verification for a30, j18, w15 and dp13 (the round-15 pool).
 
 Same three layers as the earlier pools.  Replays use independent
 algorithms: a hashlib sorted-list KMV, a Python-set Bloom filter, a
@@ -18,21 +18,20 @@ from collections import Counter, defaultdict
 import pandas as pd
 import pytest
 
-from ifcb_data_pipeline_spark.queries import REGISTRY, load_all
-from ifcb_data_pipeline_spark.queries.staged_r12 import STAGED as STAGED_R12
-from ifcb_data_pipeline_spark.queries.staged_r13 import STAGED as STAGED_R13
-from ifcb_data_pipeline_spark.queries.staged_r14 import STAGED as STAGED_R14
-from ifcb_data_pipeline_spark.queries.staged_r15 import (
-    _A30_K,
-    _J18_HASHES,
-    _J18_M,
-    STAGED,
-)
+from ifcb_data_pipeline_spark.queries import load_all
+from ifcb_data_pipeline_spark.queries.aggregates import _A30_K
+from ifcb_data_pipeline_spark.queries.joins import _J18_HASHES, _J18_M
 from tests.oracle_harness import compare
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
-load_all()
+REG = load_all()
+POOL = (
+    "a30_bottomk_distinct_sample",
+    "j18_bloom_join_prefilter",
+    "w15_ks_two_sample",
+    "dp13_leading_digit_audit",
+)
 
 
 def _h32(s: str) -> int:
@@ -44,35 +43,12 @@ def _dround(x: float, d: int) -> float:
     return math.floor(x * f + 0.5) / f
 
 
-# --- staging hygiene --------------------------------------------------------
-
-
-def test_pool_registered_and_pointers_live():
-    # round 14 registered this pool (the LAST registrations before the
-    # 216 freeze): every staged name must now be a driver-visible
-    # REGISTRY entry, and the STAGED pointer must be the very same
-    # fn/oracle the driver sees (not a stale copy)
-    assert set(STAGED) == {
-        "a30_bottomk_distinct_sample",
-        "j18_bloom_join_prefilter",
-        "w15_ks_two_sample",
-        "dp13_leading_digit_audit",
-    }
-    assert set(STAGED) <= set(REGISTRY)
-    for name, sdef in STAGED.items():
-        assert sdef.fn is REGISTRY[name].fn
-        assert sdef.oracle == REGISTRY[name].oracle
-    pools = set(STAGED_R12) | set(STAGED_R13) | set(STAGED_R14)
-    assert not (set(STAGED) & pools)  # disjoint
-    assert len(REGISTRY) == 216
-
-
 # --- layer 1: driver-strict oracle compare ---------------------------------
 
 
-@pytest.mark.parametrize("name", sorted(STAGED))
+@pytest.mark.parametrize("name", sorted(POOL))
 def test_staged_matches_oracle(name, spark, duck, sf_dir):
-    qdef = STAGED[name]
+    qdef = REG[name]
     ok, msg = compare(qdef.fn(spark, sf_dir), duck, qdef.oracle)
     assert ok, f"{name}: {msg}"
 
@@ -82,7 +58,7 @@ def test_staged_matches_oracle(name, spark, duck, sf_dir):
 
 def test_a30_hashlib_kmv_replay(spark):
     got = (
-        STAGED["a30_bottomk_distinct_sample"]
+        REG["a30_bottomk_distinct_sample"]
         .fn(spark, SF_SMOKE)
         .toPandas()
         .set_index("month")
@@ -127,7 +103,7 @@ def test_a30_estimate_monotone_law():
 
 def test_j18_set_replay_and_no_false_negatives(spark):
     got = (
-        STAGED["j18_bloom_join_prefilter"]
+        REG["j18_bloom_join_prefilter"]
         .fn(spark, SF_SMOKE)
         .toPandas()
         .set_index("nationkey")
@@ -175,7 +151,7 @@ def test_j18_set_replay_and_no_false_negatives(spark):
 
 
 def test_w15_bruteforce_replay_and_laws(spark):
-    got = STAGED["w15_ks_two_sample"].fn(spark, SF_SMOKE).toPandas().iloc[0]
+    got = REG["w15_ks_two_sample"].fn(spark, SF_SMOKE).toPandas().iloc[0]
     events = pd.read_parquet(f"{SF_SMOKE}/events.parquet")
     a = sorted(
         math.floor(v * 100.0 + 0.5)
@@ -220,7 +196,7 @@ def test_w15_self_distribution_law():
 
 def test_dp13_log10_replay_and_unit_mass(spark):
     got = (
-        STAGED["dp13_leading_digit_audit"]
+        REG["dp13_leading_digit_audit"]
         .fn(spark, SF_SMOKE)
         .toPandas()
         .set_index(["event_type", "digit"])
@@ -278,8 +254,8 @@ def test_staged_r15_no_scale_killers(spark, sf_dir):
     import re
 
     violations = []
-    for name, qd in sorted(STAGED.items()):
-        plan = _plan_of(spark, qd.fn, sf_dir)
+    for name in sorted(POOL):
+        plan = _plan_of(spark, REG[name].fn, sf_dir)
         if "CartesianProduct" in plan:
             violations.append(f"{name}: CartesianProduct")
         n_bnlj = len(re.findall(r"\(\d+\) BroadcastNestedLoopJoin", plan))
@@ -303,7 +279,7 @@ def test_r15_checkpoint_scan_budget(spark, sf_dir):
         "dp13_leading_digit_audit": 0,
     }
     for name, max_scans in budget.items():
-        plan = _plan_of(spark, STAGED[name].fn, sf_dir)
+        plan = _plan_of(spark, REG[name].fn, sf_dir)
         n = len(re.findall(r"\(\d+\) Scan parquet", plan))
         assert n <= max_scans, f"{name}: {n} parquet scans (budget {max_scans})"
 
@@ -317,8 +293,7 @@ def test_dp13_benford_log10_parity_exhaustive(spark, duck):
     engines, so dp13's chi-square contributions (multiplications and
     divisions on these shared doubles and exact counts) are
     deterministic; this pin turns that empirical fact into a gate an
-    engine upgrade cannot silently break before dp13's registration
-    round."""
+    engine upgrade cannot silently break."""
     import math
     import struct
 

@@ -34,11 +34,9 @@ ANCHOR_FILES = [
     # operator-level reference-case anchors (e.g. the clean_taxa_name
     # truth table that anchors c1, the adjacency-kill cases for w1)
     "tests/test_operators.py",
-    # staged-pool verification files: each staged candidate ships its
-    # pure-Python replay + family laws here BEFORE registration, so the
-    # anchor gate stays green the moment a future round registers one
-    # (the audit maps registry names only — unregistered names are
-    # simply not looked up).
+    # per-pool verification files: pure-Python replays + family laws
+    # for the a28-a30, dd20, st9, tx16, pk4, w13-w15, sim13, i13, sp12,
+    # o10, j18 and dp13 ops
     "tests/test_staged_r12.py",
     "tests/test_staged_r13.py",
     "tests/test_staged_r14.py",
