@@ -347,6 +347,14 @@ KERNEL_FEATURE_SCHEMA = (
 )
 
 
+#: ROIs per expansion task when :func:`features_from_images` (default
+#: full chain, ~20 ms/ROI) consumes the explode: 64 ROIs are ~1.3 s of
+#: kernel per task, the same order as the cold Python-worker start plus
+#: initialisation each task has to amortise (~1.45 s, measured on 4
+#: cores).  Pass it as ``explode_bins_to_rois(..., rois_per_task=...)``.
+FEATURE_ROIS_PER_TASK = 64
+
+
 def features_from_images(
     rois,
     threshold: int = 128,

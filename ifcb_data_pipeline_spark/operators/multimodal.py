@@ -45,18 +45,24 @@ FEATURE_SCHEMA = T.StructType(
 )
 
 
-#: Floor on ROIs per expansion task.  Per-ROI work downstream of the
-#: explode is cheap vectorized numpy (decode/resize/hash — ~0.1 ms/ROI);
-#: what dominates tiny tasks is the per-task Python-runner attach, which
-#: this box pays ~0.5-1 s for when a full-width wave of chained
-#: mapInPandas stages launches at once (measured r18: 32 one-row tasks ×
-#: 3 chained nodes = 96 simultaneous worker attaches → 2-15 s/pass; the
-#: same pass at data-derived width ≤ 4 is ~0.8 s).  2048 ROIs ≈ 0.2-0.5 s
-#: of kernel CPU per task — enough to amortize the attach at any scale.
+#: Default floor on ROIs per expansion task, sized for the cheap kernels
+#: that usually consume the explode (decode/resize/hash, ~0.1 ms/ROI).
+#: For them a tiny task is all per-task Python-runner attach (~0.5-1 s
+#: when a full-width wave of chained mapInPandas stages starts at once:
+#: 32 one-row tasks × 3 chained nodes took 2-15 s a pass against ~0.8 s
+#: at data-derived width ≤ 4).  2048 such ROIs are ~0.2-0.5 s of kernel
+#: CPU per task.  The floor holds only for kernels of that cost: the full
+#: U1-U12 chain (~20 ms/ROI) would run ~40 s per task at 2048, so a
+#: caller with a costlier consumer passes a cost-appropriate
+#: ``rois_per_task`` (:data:`.kernels.FEATURE_ROIS_PER_TASK`).
 _ROIS_PER_TASK = 2048
 
 
-def explode_bins_to_rois(bins: DataFrame, rois_per_bin_col: str = "n_rois") -> DataFrame:
+def explode_bins_to_rois(
+    bins: DataFrame,
+    rois_per_bin_col: str = "n_rois",
+    rois_per_task: int = _ROIS_PER_TASK,
+) -> DataFrame:
     """Bin → ROI expansion (S2, the only UDTF-shaped operator): one row per
     ROI.  The payload is a real (deterministic) PGM image so downstream
     kernels exercise the actual decode path, not a byte-length stand-in.
@@ -68,12 +74,14 @@ def explode_bins_to_rois(bins: DataFrame, rois_per_bin_col: str = "n_rois") -> D
     from the measured ROI total — one bounded 1-row aggregation job over
     the pre-explosion bins frame (column-pruned scan + partial agg, the
     same cheap-scalar pattern as dedup's max-id) — targeting
-    ``_ROIS_PER_TASK`` ROIs per task, capped by the bin count (round-robin
+    ``rois_per_task`` ROIs per task, capped by the bin count (round-robin
     cannot split a bin) and by the session parallelism (the downstream
     per-ROI work is a CPU-bound map stage; more tasks than cores only add
     Python-runner attach overhead).  A 38-ROI sf0.01 frame gets 1 task
     instead of 32; a 100 TB corpus hits the parallelism cap, which on a
-    real cluster is the executor-core total."""
+    real cluster is the executor-core total.  Pick ``rois_per_task`` so
+    that the consuming kernel spends about a Python-worker start per
+    task; the default suits the cheap decode/resize/hash kernels."""
     from .image_codec import encode_pgm
 
     parallelism = bins.sparkSession.sparkContext.defaultParallelism
@@ -92,7 +100,7 @@ def explode_bins_to_rois(bins: DataFrame, rois_per_bin_col: str = "n_rois") -> D
     ).first()
     n_bins = int(stats["n_bins"] or 0)
     n_rois = int(stats["n_rois"] or 0)
-    width = max(1, min(parallelism, n_bins, -(-n_rois // _ROIS_PER_TASK)))
+    width = max(1, min(parallelism, n_bins, -(-n_rois // rois_per_task)))
     bins = bins.repartition(width)  # round-robin: even bin spread
 
     def expand(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -76,8 +76,12 @@ def size_histogram(
 
 def psd_powerlaw_fit(hist: DataFrame, min_points: int = 3) -> DataFrame:
     """Per-sample OLS of ``log10(n) ~ log10(bin)``: returns a (amplitude),
-    k (exponent), r_sqr, n_bins.  n = a * bin^k  ⇔  log n = log a + k log bin."""
-    logged = hist.select(
+    k (exponent), r_sqr, n_bins.  n = a * bin^k  ⇔  log n = log a + k log bin.
+
+    Each sample's bins reach the aggregation in one task and in bin
+    order, so the float sums, and the fit's bits, do not depend on how
+    many tasks built ``hist``."""
+    logged = hist.repartition("sample").sortWithinPartitions("sample", "bin").select(
         "sample",
         F.log10(F.col("bin").cast("double")).alias("x"),
         F.log10(F.col("n").cast("double")).alias("y"),
@@ -111,7 +115,9 @@ def psd_flags(
     profile: PsdProfile = PROFILE_PIPELINE,
     bin_width: float = 5.0,
 ) -> DataFrame:
-    """Full `ifcb_psd` flag vocabulary over a fits+stats frame.
+    """Full `ifcb_psd` flag vocabulary over a fits+stats frame: returns
+    ``fits`` with a ``flag`` column added (NULL when no rule fires), so
+    callers keep every fit/stat column without joining the flags back.
 
     ``fits`` must carry the fit columns (``a``, ``k``, ``r_sqr``,
     ``n_bins``); each further rule switches on only when its stat
@@ -160,9 +166,9 @@ def psd_flags(
         )
     if "humidity" in cols:
         rules.append(F.when(F.col("humidity") > p.humidity, F.lit("Humidity")))
-    return fits.select(
-        "sample", F.concat_ws(", ", *rules).alias("flag")
-    ).withColumn("flag", F.nullif(F.col("flag"), F.lit("")))
+    return fits.withColumn(
+        "flag", F.nullif(F.concat_ws(", ", *rules), F.lit(""))
+    )
 
 
 def psd_fit_pandas(hist: DataFrame, min_points: int = 3) -> DataFrame:

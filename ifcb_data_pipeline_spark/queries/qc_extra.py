@@ -274,16 +274,14 @@ def u13_psd_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.avg("l_tax") * 100000.0).alias("biomass_stat"),
     ).withColumn("humidity", F.col("sample") * 37 % 100)
     full = fits.join(hstats, "sample").join(rstats, "sample")
-    flag_p = psd_flags(full, PROFILE_PIPELINE, bin_width=5.0).withColumnRenamed(
+    flagged = psd_flags(full, PROFILE_PIPELINE, bin_width=5.0).withColumnRenamed(
         "flag", "flag_pipeline"
     )
-    flag_i = psd_flags(full, PROFILE_INGEST, bin_width=5.0).withColumnRenamed(
+    flagged = psd_flags(flagged, PROFILE_INGEST, bin_width=5.0).withColumnRenamed(
         "flag", "flag_ingest"
     )
     return (
-        full.join(flag_p, "sample")
-        .join(flag_i, "sample")
-        .select(
+        flagged.select(
             "sample",
             "n_bins",
             dround(F.col("a"), 6).alias("a"),

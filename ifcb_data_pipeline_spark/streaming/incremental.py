@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -41,9 +42,14 @@ class CheckpointedJob:
         self.ledger_path = os.path.join(checkpoint_dir, "ledger")
 
     def ledger(self) -> DataFrame:
+        """The processed keys; empty only when no ledger exists yet.  Any
+        other read failure (a corrupt or unreadable ledger) propagates:
+        reading it as empty would reprocess and re-append every key."""
         try:
             return self.spark.read.parquet(self.ledger_path)
-        except Exception:
+        except AnalysisException as e:
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
             return self.spark.createDataFrame([], f"{self.key} string")
 
     def pending(self, candidates: DataFrame) -> DataFrame:

@@ -4,11 +4,21 @@ incremental ingest+QC job (SURVEY §3.1-3.2 shapes)."""
 from __future__ import annotations
 
 import glob
+import math
 import os
+import struct
 import tempfile
 
+import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
+from ifcb_data_pipeline_spark.operators.kernels import (
+    FEATURE_ROIS_PER_TASK,
+    features_from_images,
+)
+from ifcb_data_pipeline_spark.operators.multimodal import explode_bins_to_rois
+from ifcb_data_pipeline_spark.plans import ingest_qc
 from ifcb_data_pipeline_spark.plans.ecotaxa_export import (
     to_ecotaxa_rows,
     write_ecotaxa,
@@ -76,3 +86,93 @@ def test_ingest_tick_incremental(spark):
         feats = spark.read.parquet(f"{out}/features")
         assert feats.count() == r1["rois"] + 5
         assert feats.select("sample").distinct().count() == 9
+
+
+def _bits(v):
+    """Row value with every float as its IEEE bytes, arrays included."""
+    if isinstance(v, float):
+        return struct.pack("<d", v)
+    if isinstance(v, list):
+        return tuple(_bits(x) for x in v)
+    return v
+
+
+def _feature_bits(df):
+    return sorted(tuple(_bits(v) for v in row) for row in df.collect())
+
+
+def test_ingest_tick_spreads_kernel_bit_identically(spark, monkeypatch):
+    """The tick sizes its expansion for the full kernel chain: a 6-bin,
+    130-ROI tick runs min(parallelism, 6, ⌈130/64⌉) tasks and writes the
+    features the default-width expansion computes, bit for bit; a 1-bin
+    delta tick stays at one task."""
+    widths = []
+
+    def recording(bins, **kw):
+        rois = explode_bins_to_rois(bins, **kw)
+        widths.append(rois.rdd.getNumPartitions())
+        return rois
+
+    monkeypatch.setattr(ingest_qc, "explode_bins_to_rois", recording)
+    counts = [20, 24, 26, 22, 18, 20]
+    bins = spark.createDataFrame(
+        [(str(i), n) for i, n in enumerate(counts, 1)], "sample string, n_rois int"
+    )
+    expected = min(
+        spark.sparkContext.defaultParallelism,
+        len(counts),
+        math.ceil(sum(counts) / FEATURE_ROIS_PER_TASK),
+    )
+    if expected < 2:
+        pytest.skip("a session with one core cannot spread the expansion")
+    with tempfile.TemporaryDirectory() as tmp:
+        ckpt, out = f"{tmp}/ckpt", f"{tmp}/out"
+        r1 = ingest_tick(spark, bins, ckpt, out)
+        assert r1["rois"] == sum(counts)
+        assert widths == [expected]
+        reference = features_from_images(explode_bins_to_rois(bins))
+        assert reference.rdd.getNumPartitions() == 1
+        written = spark.read.parquet(f"{out}/features")
+        assert written.columns == reference.columns
+        assert _feature_bits(written) == _feature_bits(reference)
+
+        more = bins.unionByName(
+            spark.createDataFrame([("99", 22)], "sample string, n_rois int")
+        )
+        r2 = ingest_tick(spark, more, ckpt, out)
+        assert r2["bins"] == 1 and r2["rois"] == 22
+        assert widths == [expected, 1]
+
+
+def test_ingest_tick_corrupt_ledger_raises_and_appends_nothing(spark):
+    """Only a missing ledger reads as empty: a corrupt one must fail the
+    tick, not re-append every bin's features."""
+    bins = spark.createDataFrame([("1", 3)], "sample string, n_rois int")
+    with tempfile.TemporaryDirectory() as tmp:
+        ckpt, out = f"{tmp}/ckpt", f"{tmp}/out"
+        os.makedirs(f"{ckpt}/ledger")
+        with open(f"{ckpt}/ledger/part-0.parquet", "wb") as fh:
+            fh.write(b"not a parquet file")
+        with pytest.raises(Py4JJavaError):
+            ingest_tick(spark, bins, ckpt, out)
+        assert not os.path.exists(out)
+
+
+def test_ingest_tick_releases_caches_when_a_write_fails(spark):
+    """A failed write leaves none of the tick's cached frames pinned in
+    the session."""
+    bins = spark.createDataFrame([("1", 3)], "sample string, n_rois int")
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs())
+
+    before = persisted()
+    with tempfile.TemporaryDirectory() as tmp:
+        out = f"{tmp}/out"
+        os.makedirs(out)
+        with open(f"{out}/features", "w") as fh:  # a file where the table goes
+            fh.write("x")
+        with pytest.raises(Py4JJavaError):
+            ingest_tick(spark, bins, f"{tmp}/ckpt", out)
+        assert not os.path.exists(f"{tmp}/ckpt/ledger")
+    assert not persisted() - before

@@ -34,6 +34,25 @@ def test_powerlaw_recovers_known_exponent(spark):
     assert fit["r_sqr"] == pytest.approx(1.0, abs=1e-4)
 
 
+def test_powerlaw_fit_bits_independent_of_partitioning(spark):
+    """The fit's float sums run in bin order per sample, so the same sizes
+    spread over any number of tasks give the same bits."""
+    import numpy as np
+
+    rng = np.random.default_rng(0)
+    rows = [(s, float(d)) for s in range(12) for d in rng.pareto(1.5, 300) * 4 + 2]
+    sizes = spark.createDataFrame(rows, "sample long, size double")
+
+    def fit(frame):
+        hist = size_histogram(frame, "sample", "size", bin_width=2.0)
+        return sorted(tuple(r) for r in psd_powerlaw_fit(hist).collect())
+
+    one = fit(sizes.coalesce(1))
+    assert len(one) == 12
+    for n in (2, 4, 7):
+        assert fit(sizes.repartition(n)) == one
+
+
 def test_flag_vocabulary_both_profiles(spark):
     from ifcb_data_pipeline_spark.operators.psd import (
         PROFILE_INGEST,
@@ -62,6 +81,8 @@ def test_flag_vocabulary_both_profiles(spark):
     }
     rows = [{"sample": s, **base, **d} for s, d in cases.items()]
     df = spark.createDataFrame(rows)
+    # the input frame comes back whole, with the flag appended
+    assert psd_flags(df, PROFILE_PIPELINE).columns == [*df.columns, "flag"]
     flags_p = {r["sample"]: r["flag"] for r in psd_flags(df, PROFILE_PIPELINE).collect()}
     flags_i = {r["sample"]: r["flag"] for r in psd_flags(df, PROFILE_INGEST).collect()}
     assert flags_p[1] is None and flags_i[1] is None
